@@ -70,7 +70,6 @@ from .skew import (
     default_knee_rows,
     join_back_nullsafe,
     join_size_estimate,
-    pipeline_skew_strategy,
     resolve_window_strategy,
     max_partition_rows,
     salted_agg,
@@ -245,7 +244,6 @@ __all__ = [
     "skew_conf_scope",
     "default_knee_rows",
     "join_back_nullsafe",
-    "pipeline_skew_strategy",
     "resolve_window_strategy",
     "max_partition_rows",
     "choose_weight_strategy",

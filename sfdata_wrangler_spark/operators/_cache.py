@@ -1,21 +1,23 @@
 """Tracked operator-level persists, releasable in one call.
 
 Several multi-consumer operators (``prefix_filter_pairs``,
-``duplicate_spans``, ``triangle_count``, ``blocked_fuzzy_pairs``, and
-the knobs on linkage/lm) persist an intermediate that multiple
-downstream branches read — measured wins (ARCHITECTURE.md round-5
-notes). Persisted plans outlive the returned lazy DataFrame: Spark's
-CacheManager serves them to ANY later query with a matching
-canonicalized subplan, so a long-lived library session that calls
-these operators repeatedly would accumulate corpus-scale
-MEMORY_AND_DISK entries with no handle to drop them (ADVICE r5).
+``minhash_lsh_pairs``, ``duplicate_spans``, ``drop_boilerplate_lines``,
+``triangle_count``, ``pagerank``, ``blocked_fuzzy_pairs``,
+``funnel_episodes``, ``bigram_lm_score``, the IVF-PQ build) persist an
+intermediate that multiple downstream branches read — measured wins
+(ARCHITECTURE.md round-5 notes). Persisted plans outlive the returned
+lazy DataFrame: Spark's CacheManager serves them to ANY later query
+with a matching canonicalized subplan, so a long-lived library
+session that calls these operators repeatedly would accumulate
+corpus-scale MEMORY_AND_DISK entries with no handle to drop them
+(ADVICE r5).
 
 This registry gives callers that handle without changing the
-operators' lazy contract: every ``materialize=True`` persist routes
-through :func:`tracked_persist`, and
-:func:`release_operator_caches` unpersists everything still tracked
-— cheaper and more targeted than ``spark.catalog.clearCache()``,
-which also evicts caches the caller created themselves.
+operators' lazy contract: every operator persist routes through
+:func:`tracked_persist`, and :func:`release_operator_caches`
+unpersists everything still tracked — cheaper and more targeted than
+``spark.catalog.clearCache()``, which also evicts caches the caller
+created themselves.
 
 Strong references are kept on purpose: the caller usually holds only
 the downstream result, so the persisted intermediate's Python wrapper
@@ -75,13 +77,13 @@ def _release(handles: list[DataFrame]) -> int:
 
 
 def release_operator_caches() -> int:
-    """Unpersist every intermediate a ``materialize=True`` operator
-    pinned in this process OUTSIDE any :func:`cache_scope`; returns
-    how many were released. Call between queries in a long-lived
-    session (or whenever the corpus-scale cache should be handed back
-    to the executors). Scoped persists are released by their scope's
-    exit, never by this global sweep — independent callers using
-    scopes cannot be evicted from here."""
+    """Unpersist every intermediate an operator pinned in this process
+    OUTSIDE any :func:`cache_scope`; returns how many were released.
+    Call between queries in a long-lived session (or whenever the
+    corpus-scale cache should be handed back to the executors). Scoped
+    persists are released by their scope's exit, never by this global
+    sweep — independent callers using scopes cannot be evicted from
+    here."""
     with _LOCK:
         handles = list(_TRACKED)
         _TRACKED.clear()

@@ -173,7 +173,6 @@ def bpe_train(
     num_merges: int = 30,
     text_col: str = "text",
     min_pair_count: int = 2,
-    checkpoint_every: int = 4,
     max_driver_types: int = 5_000_000,
 ) -> tuple[list[tuple[str, str, int]], DataFrame]:
     """Learn ``num_merges`` BPE merges from the corpus.
@@ -190,12 +189,11 @@ def bpe_train(
     merge count instead of one per merge. Set ``max_driver_types=0``
     to force the distributed per-merge loop.
 
-    ``checkpoint_every`` (distributed path): an eager checkpoint is a
-    second job per iteration; applying merges lazily and truncating
-    lineage every k merges halves the job count for k=4 at the cost
-    of replaying at most k-1 folds over the (tiny) word-type table
-    inside each argmax job — same batching trade as the
-    connected-components probe.
+    Distributed path: an eager checkpoint is a second job per
+    iteration; applying merges lazily and truncating lineage every 4
+    merges halves the job count at the cost of replaying at most 3
+    folds over the (tiny) word-type table inside each argmax job —
+    same batching trade as the connected-components probe.
     """
     spark = docs.sparkSession
     words = word_type_counts(docs, text_col).select(
@@ -255,7 +253,7 @@ def bpe_train(
         words = words.select(
             "word", "n", _merge_fold(F.col("sym"), left, right).alias("sym")
         )
-        if (it + 1) % checkpoint_every == 0:
+        if (it + 1) % 4 == 0:
             words = words.localCheckpoint(eager=True)
 
     segmentation = words.select("word", "n", F.col("sym").alias("tokens"))

@@ -313,7 +313,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     shingle_n: int = 3,
     hash_fn: str = "xxhash64",
-    materialize: bool = True,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
 
@@ -322,23 +321,20 @@ def minhash_lsh_pairs(
     The join key is (band_idx, band_hash): cardinality ~n·bands rows,
     and only colliding docs ever pair — the scale-safe shape.
 
-    ``materialize`` persists the band index before the self-join
-    (r15): the join's two sides are the SAME n·bands-row table, but
-    one side broadcasts, so exchange reuse can never dedup them and
-    the full signature pipeline (shingle explode + k hashes + min
-    aggregate — the dominant cost) runs twice. The persist is three
-    ints per (doc, band) and pays for itself as soon as the corpus
-    outgrows the fill cost: interleaved A/B reads a wash at sf0.1
-    (1.34 vs 1.40 s count) and **4.17 → 2.99 s** on the 10x sf1
-    replica. CacheManager lifetime (released by clearCache /
-    release_operator_caches); pass False for cache-free."""
-    buckets = minhash_band_index(
-        df, text_col, id_col, num_hashes, bands, shingle_n, hash_fn
+    The band index is persisted before the self-join (r15): the
+    join's two sides are the SAME n·bands-row table, but one side
+    broadcasts, so exchange reuse can never dedup them and the full
+    signature pipeline (shingle explode + k hashes + min aggregate —
+    the dominant cost) would run twice. The persist is three ints per
+    (doc, band) and pays for itself as soon as the corpus outgrows the
+    fill cost: interleaved A/B reads a wash at sf0.1 (1.34 vs 1.40 s
+    count) and **4.17 → 2.99 s** on the 10x sf1 replica. Released by
+    ``release_operator_caches`` / ``cache_scope``."""
+    buckets = tracked_persist(
+        minhash_band_index(
+            df, text_col, id_col, num_hashes, bands, shingle_n, hash_fn
+        )
     )
-    if materialize:
-        from ._cache import tracked_persist
-
-        buckets = tracked_persist(buckets)
     a = buckets.alias("a")
     b = buckets.alias("b")
     return (
@@ -481,29 +477,20 @@ def _shingle_stream(
     id_col: str,
     shingle_n: int,
     max_doc_freq: int | None,
-    materialize: bool,
 ) -> DataFrame:
     """The distinct-shingle inverted-index input shared by the exact
     pair operators: spread → explode distinct shingles → optional
-    stop-shingle prune. ``materialize`` persists the stream BEFORE
-    the prune so the expensive source explode runs once even though
-    the frequency aggregate and the prune join both read it (the
-    knob's stated scenario is an input that is expensive to re-scan).
-    Default OFF by measurement (r5, sf0.1, idle, best-of-4 noop:
-    persist 1.73s vs recompute 1.33s — two extra cheap explodes of
-    page-cached text beat writing/reading a corpus-scale cache;
-    contrast prefix_filter_pairs, five consumers + windows, where
-    the persist wins). CacheManager lifetime — released by
-    ``spark.catalog.clearCache()`` or session end; sweep tools clear
-    between queries."""
+    stop-shingle prune. Not persisted, by measurement (r5, sf0.1,
+    idle, best-of-4 noop: persist 1.73s vs recompute 1.33s — two
+    extra cheap explodes of page-cached text beat writing/reading a
+    corpus-scale cache; contrast prefix_filter_pairs, five consumers
+    + windows, where the persist wins)."""
     sh = _spread(df).select(
         F.col(id_col),
         F.explode(
             F.array_distinct(word_shingles(F.col(text_col), shingle_n))
         ).alias("sh"),
     )
-    if materialize:
-        sh = tracked_persist(sh)
     if max_doc_freq is not None:
         freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("__df"))
         sh = sh.join(
@@ -518,7 +505,6 @@ def exact_jaccard_pairs(
     id_col: str = "doc_id",
     shingle_n: int = 3,
     max_doc_freq: int | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """ALL pairs sharing ≥ 1 word shingle, with exact intersection /
     union counts: (id_a, id_b, inter, union_sz).
@@ -537,9 +523,7 @@ def exact_jaccard_pairs(
     shingles carry ~no similarity signal anyway). Intersections and
     union sizes are then computed over the SURVIVING shingle sets, so
     the Jaccard stays internally consistent."""
-    sh = _shingle_stream(
-        df, text_col, id_col, shingle_n, max_doc_freq, materialize
-    )
+    sh = _shingle_stream(df, text_col, id_col, shingle_n, max_doc_freq)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -568,7 +552,7 @@ def exact_jaccard_pairs(
 
 def cluster_duplicates(
     pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
-    max_iterations: int = 20, check_every: int = 3,
+    max_iterations: int = 20,
 ) -> DataFrame:
     """Connected components over near-duplicate pairs → (doc_id,
     cluster_id) with cluster_id = min doc id in the component.
@@ -580,8 +564,8 @@ def cluster_duplicates(
     rounds even at corpus scale. The final keep-one-per-cluster step
     is then ``dedup_by_order`` on cluster_id.
 
-    Convergence is probed only every ``check_every`` rounds: each probe
-    is a driver-side action (job launch), and labels are monotonically
+    Convergence is probed only every 3rd round: each probe is a
+    driver-side action (job launch), and labels are monotonically
     non-increasing per node, so "unchanged across k rounds" ⟺
     "unchanged each round" — batching the probe trades a few cheap
     extra propagation rounds for k× fewer serialized job launches.
@@ -616,7 +600,7 @@ def cluster_duplicates(
             )
         )
         labels = new_labels.localCheckpoint(eager=True)
-        if (it + 1) % check_every == 0 or it == max_iterations - 1:
+        if (it + 1) % 3 == 0 or it == max_iterations - 1:
             n_checks += 1
             changed = (
                 labels.alias("n")
@@ -641,7 +625,6 @@ def containment_pairs(
     shingle_n: int = 3,
     min_containment_pct: int = 50,
     max_doc_freq: int | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """Asymmetric near-dup detection: pairs where one document's
     shingle set is largely CONTAINED in the other's —
@@ -657,9 +640,7 @@ def containment_pairs(
     the threshold cannot waver across engines. ``max_doc_freq`` is
     the same stop-shingle skew guard.
     """
-    sh = _shingle_stream(
-        df, text_col, id_col, shingle_n, max_doc_freq, materialize
-    )
+    sh = _shingle_stream(df, text_col, id_col, shingle_n, max_doc_freq)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -782,7 +763,6 @@ def prefix_filter_pairs(
     id_col: str = "doc_id",
     shingle_n: int = 3,
     threshold_pct: int = 50,
-    materialize: bool = True,
 ) -> DataFrame:
     """EXACT Jaccard-threshold similarity self-join via prefix
     filtering (PPJoin-style) — the no-false-negative alternative to
@@ -806,13 +786,10 @@ def prefix_filter_pairs(
     Returns (id_a, id_b, inter, union_sz) for pairs with
     J ≥ threshold_pct/100, id_a < id_b.
 
-    ``materialize`` (default on) persists the distinct-shingle stream
-    its five consumer stages read. NOTE the Spark lifetime: a
-    DataFrame persist() lives in the session's CacheManager until
-    ``spark.catalog.clearCache()`` (or session end) — repeated calls
-    in a long-lived session accumulate cache entries (our sweep tools
-    clear between queries). Pass ``materialize=False`` to keep the
-    operator cache-free.
+    The distinct-shingle stream its five consumer stages read is
+    persisted. It lives in the session's CacheManager until
+    ``release_operator_caches`` (or the enclosing ``cache_scope``)
+    releases it.
     """
     # The distinct-shingle stream is consumed FIVE times (document
     # frequencies, the ranked prefix, both sides of the intersection
@@ -821,14 +798,14 @@ def prefix_filter_pairs(
     # inverted-index input every stage reads (MEMORY_AND_DISK: spills
     # instead of OOM at corpus scale; persist keeps the lineage
     # recompute path on executor loss).
-    sh = _spread(df).select(
-        F.col(id_col).alias("__id"),
-        F.explode(
-            F.array_distinct(word_shingles(F.col(text_col), shingle_n))
-        ).alias("sh"),
+    sh = tracked_persist(
+        _spread(df).select(
+            F.col(id_col).alias("__id"),
+            F.explode(
+                F.array_distinct(word_shingles(F.col(text_col), shingle_n))
+            ).alias("sh"),
+        )
     )
-    if materialize:
-        sh = tracked_persist(sh)
     freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("__df"))
     ranked = (
         sh.join(freq, "sh")

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._cache import tracked_persist
+
 __all__ = [
     "funnel_steps",
     "funnel_episodes",
@@ -94,7 +96,6 @@ def funnel_episodes(
     user_col: str = "user_id",
     ts_col: str = "ts",
     type_col: str = "event_type",
-    materialize: bool = True,
 ) -> DataFrame:
     """Multi-episode funnel: ``(user, episode, t1, ..., tk)`` — one
     row per greedy funnel EPISODE, where episode 1 opens at the
@@ -111,12 +112,10 @@ def funnel_episodes(
     to the step-1 slice. Each seed frame is referenced twice (next
     stage + final union), so WITHOUT materialization stage e
     re-executes stages 1..e-1 — triangular recomputation of the
-    step-1 scan, O(E^2) at the cap. ``materialize`` (default on)
-    persists each user-grain seed frame (tracked —
-    operators.release_operator_caches frees them), making the work
-    linear in max_episodes: the oracle's MATERIALIZED CTEs state the
-    same choice. Pass ``materialize=False`` for a fully lazy plan on
-    small inputs.
+    step-1 scan, O(E^2) at the cap. Each user-grain seed frame is
+    therefore persisted (tracked — operators.release_operator_caches
+    frees them), making the work linear in max_episodes: the
+    oracle's MATERIALIZED CTEs state the same choice.
 
     This is the batch twin of the streaming operator
     (streaming/funnel_stream.stateful_funnel), which emits the same
@@ -129,18 +128,14 @@ def funnel_episodes(
     s1 = events.where(F.col(type_col) == steps[0]).select(
         user_col, F.col(ts_col).alias("__t")
     )
-    prev = (
+    prev = tracked_persist(
         s1.groupBy(user_col)
         .agg(F.min("__t").alias("t1"))
         .withColumn("episode", F.lit(1))
     )
-    if materialize:
-        from ._cache import tracked_persist
-
-        prev = tracked_persist(prev)
     seed_frames = [prev]
     for e in range(2, max_episodes + 1):
-        prev = (
+        prev = tracked_persist(
             prev.select(user_col, "t1")
             .join(s1, user_col)
             .where(
@@ -150,8 +145,6 @@ def funnel_episodes(
             .agg(F.min("__t").alias("t1"))
             .withColumn("episode", F.lit(e))
         )
-        if materialize:
-            prev = tracked_persist(prev)
         seed_frames.append(prev)
     cur = seed_frames[0]
     for f in seed_frames[1:]:

@@ -81,18 +81,15 @@ def degree_table(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_count(edges: DataFrame, materialize: bool = True) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """One-row frame ``(n_triangles)``.
 
     Orientation: lo -> hi by (degree, node) total order; wedges are
     built at the lo vertex and closed by an equi-join back to the
     oriented edge set. Three hash joins, no driver state.
 
-    ``materialize`` persists the oriented edge list its four
-    consumers read (cache lives in CacheManager until
-    ``spark.catalog.clearCache()``/session end — sweep tools clear
-    between queries; pass False for a cache-free plan, which leans on
-    ReusedExchange instead).
+    The oriented edge list its four consumers read is persisted;
+    ``release_operator_caches`` / ``cache_scope`` release it.
     """
     deg = degree_table(edges)
     with_rank = (
@@ -109,12 +106,13 @@ def triangle_count(edges: DataFrame, materialize: bool = True) -> DataFrame:
     # r5 plan audit measured 40 input scans on the catalog query.
     # Materializing the oriented edges once is the standard first step
     # of every distributed triangle count; edge-grain, MEMORY_AND_DISK.
-    oriented = with_rank.select(
-        F.when(lo_first | tie, F.col("src")).otherwise(F.col("dst")).alias("lo"),
-        F.when(lo_first | tie, F.col("dst")).otherwise(F.col("src")).alias("hi"),
+    lo_hi = lo_first | tie
+    oriented = tracked_persist(
+        with_rank.select(
+            F.when(lo_hi, F.col("src")).otherwise(F.col("dst")).alias("lo"),
+            F.when(lo_hi, F.col("dst")).otherwise(F.col("src")).alias("hi"),
+        )
     )
-    if materialize:
-        oriented = tracked_persist(oriented)
     w1 = oriented.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     w2 = oriented.select(F.col("lo").alias("a"), F.col("hi").alias("c"))
     wedges = w1.join(w2, "a").where(F.col("b") < F.col("c"))
@@ -143,7 +141,7 @@ def pagerank(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     outdeg = both.groupBy("src").agg(F.count(F.lit(1)).alias("outd"))
-    adj = both.join(outdeg, "src").persist()
+    adj = tracked_persist(both.join(outdeg, "src"))
     n = adj.select("src").distinct().count()
     base = (1.0 - damping) / n
     ranks = adj.select("src").distinct().select(
@@ -191,7 +189,7 @@ def pagerank_micro(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     outdeg = both.groupBy("src").agg(F.count(F.lit(1)).alias("outd"))
-    adj = both.join(outdeg, "src").persist()
+    adj = tracked_persist(both.join(outdeg, "src"))
     n = adj.select("src").distinct().count()
     base = ((100 - damping_pct) * scale) // (100 * n)
     ranks = adj.select("src").distinct().select(

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._cache import tracked_persist
+
 
 def tokens_to_lines(text: Column, width: int, sep: str = "\n") -> Column:
     """Fold a whitespace-token text into lines of ``width`` tokens, as
@@ -58,7 +60,6 @@ def drop_boilerplate_lines(
     id_col: str = "doc_id",
     text_col: str = "text",
     sep: str = "\n",
-    materialize: bool = True,
 ) -> DataFrame:
     """Remove every line that occurs in >= ``min_docs`` distinct
     documents; return ``(id_col, text, n_lines, n_kept)`` with
@@ -67,22 +68,21 @@ def drop_boilerplate_lines(
     Line identity is the raw line string (hashed for the shuffle);
     normalize upstream if e.g. case-insensitive matching is wanted.
 
-    ``materialize`` persists the exploded line stream — its two
-    consumers (the distinct-doc frequency aggregate and the
-    reassembly pass) would otherwise each re-run the upstream text
-    projection + explode + per-line md5, the dominant map cost (the
-    same trade spandedup.duplicate_spans documents; measured r14 on
+    The exploded line stream is persisted — its two consumers (the
+    distinct-doc frequency aggregate and the reassembly pass) would
+    otherwise each re-run the upstream text projection + explode +
+    per-line md5, the dominant map cost (the same trade
+    spandedup.duplicate_spans documents; measured r14 on
     pipe_curation_v3's input: 2.10-2.23 s → 1.43-1.58 s noop).
-    CacheManager lifetime (released by ``spark.catalog.clearCache()``
-    / session end); pass False for cache-free."""
-    lines = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("__pos", "__line"),
-    ).withColumn("__lh", F.md5(F.col("__line")))
-    if materialize:
-        from ._cache import tracked_persist
-
-        lines = tracked_persist(lines)
+    Released by ``release_operator_caches`` / ``cache_scope``."""
+    lines = tracked_persist(
+        docs.select(
+            F.col(id_col),
+            F.posexplode(F.split(F.col(text_col), sep)).alias(
+                "__pos", "__line"
+            ),
+        ).withColumn("__lh", F.md5(F.col("__line")))
+    )
 
     # ONLY the boilerplate hashes (the Zipf head — far smaller than
     # the full distinct-line table the old inner-join carried)

@@ -50,16 +50,14 @@ def blocked_fuzzy_pairs(
     text_col: str,
     max_distance: int = 3,
     max_block: int = 10_000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Candidate entity pairs ``(name_a, name_b, dist)`` with
     ``name_a < name_b``, edit distance <= max_distance, compared only
     within blocks of <= max_block distinct names.
 
-    ``materialize`` persists the surviving entity-grain table both
-    self-join sides read (CacheManager lifetime — released by
-    ``spark.catalog.clearCache()`` or session end; sweep tools clear
-    between queries)."""
+    The surviving entity-grain table both self-join sides read is
+    persisted; ``release_operator_caches`` / ``cache_scope`` release
+    it."""
     blocked, sizes, cap = _blocked(df, text_col, max_block)
     # Materialize the surviving entity-grain table once: both sides of
     # the within-block self-join read it, and without the persist
@@ -71,13 +69,13 @@ def blocked_fuzzy_pairs(
     # blocking_quality rewrite, lk_blocking_quality's input scans
     # dropped 13 → 9 (the rest belong to the quadratic truth sample
     # that only exists in the sample-sized evaluation query).
-    ok = blocked.join(
-        F.broadcast(sizes.where(F.col("block_n") <= cap).select("block")),
-        "block",
-        "left_semi",
+    ok = tracked_persist(
+        blocked.join(
+            F.broadcast(sizes.where(F.col("block_n") <= cap).select("block")),
+            "block",
+            "left_semi",
+        )
     )
-    if materialize:
-        ok = tracked_persist(ok)
     a = ok.select("block", F.col("name").alias("name_a"))
     b = ok.select("block", F.col("name").alias("name_b"))
     pairs = (

@@ -43,14 +43,9 @@ from ._cache import tracked_persist
 from ..functions.text import normalize_text
 
 
-def _bigrams(
-    df: DataFrame, id_col: str, text_col: str, pretokenized: bool = False
-) -> DataFrame:
+def _bigrams(df: DataFrame, id_col: str, toks_col: str) -> DataFrame:
     """One row per adjacent token pair: (id, prev, cur)."""
-    if pretokenized:
-        toks = F.col(text_col)
-    else:
-        toks = F.split(normalize_text(F.col(text_col)), " ")
+    toks = F.col(toks_col)
     pairs = F.when(
         F.size(toks) >= 2,
         F.arrays_zip(
@@ -68,9 +63,7 @@ def bigram_lm_score(
     train: DataFrame | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize_model: bool = False,
     pretokenized: bool = False,
-    materialize_tokens: bool = True,
 ) -> DataFrame:
     """Score each document by mean add-one-smoothed bigram likelihood.
 
@@ -80,48 +73,35 @@ def bigram_lm_score(
     fewer than two tokens score 0 over 0 bigrams. Higher mean = more
     predictable under the reference distribution.
 
-    ``materialize_model=True`` persists the c2 pair-count table
-    (MEMORY_AND_DISK, token-type-pair sized) so deriving c1 and the
-    scoring join reuse one aggregation instead of Catalyst planning
-    the ``c1 = groupBy(c2)`` lineage as a SECOND full corpus
-    scan+explode. Default OFF after measuring both (r5, sf0.1, idle,
-    noop sink): standalone it is a wash (best 1.20s plain vs 1.30s
-    persisted), and inside pipe_curation_v3 — where the input is
-    already checkpointed, so the "extra corpus pass" is a cheap
-    cache re-read — the persist COSTS ~1.1s (4.6s → 5.75s): Spark
-    does not re-optimize through an InMemoryRelation boundary
+    The c2 pair-count table is NOT persisted, by measurement (r5,
+    sf0.1, idle, noop sink): standalone a persist is a wash (best
+    1.20s plain vs 1.30s persisted), and inside pipe_curation_v3 —
+    where the input is already checkpointed — it COSTS ~1.1s
+    (4.6s → 5.75s): Spark does not re-optimize through an
+    InMemoryRelation boundary
     (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
     defaults false), so the cached aggregation loses AQE coalescing.
-    Turn it ON when the training corpus is expensive to re-scan
-    (train ≠ docs reading remote storage at cluster scale) and the
-    re-read is not already covered by an upstream checkpoint.
 
     ``pretokenized=True`` (r14, guide §1.2): ``text_col`` holds the
     ALREADY-split token array ``split(normalize_text(text), ' ')``
-    instead of raw text. The LM touches the corpus in three branches
-    (training counts, vocabulary, document bigrams); each one
-    re-evaluates normalize+split when handed raw text. A caller that
-    already materialized the tokens (pipe_curation_v3's checkpoint)
-    skips that regex work 3x. Scores are bit-identical — same token
-    stream by construction, including the [''] single-element array
-    an empty text normalizes to.
+    instead of raw text. A caller that already materialized the
+    tokens (pipe_curation_v3's checkpoint) skips the tokenizer.
+    Scores are bit-identical — same token stream by construction,
+    including the [''] single-element array an empty text normalizes
+    to.
 
-    ``materialize_tokens`` (default on; r14, guide §4/§5): when
-    handed RAW text, tokenize once into a tracked persist and run the
-    pretokenized path against it, so the three corpus branches share
-    one normalize-regex + split evaluation instead of re-running it
-    each (interleaved noop A/B at sf0.1, self-scored:
-    1.22/1.25/1.45 s → **0.76/0.83/0.87 s**). Token-stream-sized
-    cache (the linedup/spandedup materialize trade); released via
-    release_operator_caches / clearCache. No-op when ``pretokenized``
-    (the caller already materialized tokens). Unlike
-    ``materialize_model`` this persists BELOW every aggregation, so
-    nothing loses AQE coalescing (the r5 counter-finding does not
-    apply).
+    RAW text is tokenized once into a tracked persist (r14, guide
+    §4/§5), so the three corpus branches (training counts,
+    vocabulary, document bigrams) share one normalize-regex + split
+    evaluation instead of re-running it each (interleaved noop A/B at
+    sf0.1, self-scored: 1.22/1.25/1.45 s → **0.76/0.83/0.87 s**).
+    Token-stream-sized cache (the linedup/spandedup trade); released
+    via release_operator_caches / cache_scope. It sits BELOW every
+    aggregation, so nothing loses AQE coalescing (the r5
+    counter-finding above does not apply).
     """
     train = docs if train is None else train
-    if materialize_tokens and not pretokenized:
-        from ._cache import tracked_persist
+    if not pretokenized:
 
         def _tok(df: DataFrame) -> DataFrame:
             return tracked_persist(
@@ -134,33 +114,19 @@ def bigram_lm_score(
             )
 
         docs_t = _tok(docs)
-        train_t = docs_t if train is docs else _tok(train)
-        return bigram_lm_score(
-            docs_t,
-            train=train_t,
-            id_col=id_col,
-            text_col="__toks",
-            materialize_model=materialize_model,
-            pretokenized=True,
-        )
+        train = docs_t if train is docs else _tok(train)
+        docs, text_col = docs_t, "__toks"
 
-    train_bg = _bigrams(train, id_col, text_col, pretokenized)
+    train_bg = _bigrams(train, id_col, text_col)
     c2 = train_bg.groupBy("prev", "cur").agg(
         F.count(F.lit(1)).cast("bigint").alias("c2")
     )
-    if materialize_model:
-        c2 = tracked_persist(c2)
     c1 = c2.groupBy("prev").agg(F.sum("c2").cast("bigint").alias("c1"))
-    vocab_toks = (
-        F.col(text_col)
-        if pretokenized
-        else F.split(normalize_text(F.col(text_col)), " ")
-    )
-    vocab = train.select(F.explode(vocab_toks).alias("tok")).agg(
+    vocab = train.select(F.explode(F.col(text_col)).alias("tok")).agg(
         F.count_distinct("tok").cast("bigint").alias("v")
     )
 
-    doc_bg = _bigrams(docs, id_col, text_col, pretokenized)
+    doc_bg = _bigrams(docs, id_col, text_col)
     scored = (
         doc_bg.join(c2, ["prev", "cur"], "left")
         .join(c1, "prev", "left")

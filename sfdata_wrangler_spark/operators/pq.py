@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._cache import tracked_persist
+
 __all__ = [
     "pq_codebooks",
     "pq_encode",
@@ -305,7 +307,6 @@ def ivf_coarse_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    materialize: bool = True,
 ) -> DataFrame:
     """Coarse (cell) centroids ``(cid, subspace, dim, c_micro)``:
     per-label integer-division means over micro coordinates — the
@@ -313,7 +314,7 @@ def ivf_coarse_centroids(
     ``similarity.kmeans_centroids`` when cross-engine hash parity is
     not required). Output is L·d rows — broadcast-sized.
 
-    ``materialize`` (default on, tracked — r14, guide §5): the table
+    The table is persisted (tracked — r14, guide §5): it
     broadcasts into the build and search under SEVERAL DIFFERENT join
     key sets ((subspace, dim) for assignment, (cid, subspace, dim)
     for residuals), and exchange reuse only dedups identical
@@ -335,14 +336,11 @@ def ivf_coarse_centroids(
         m,
         sub_dim,
     )
-    out = lf.groupBy("cid", "subspace", "dim").agg(
-        F.expr("sum(x_micro) div count(1)").cast("bigint").alias("c_micro")
+    return tracked_persist(
+        lf.groupBy("cid", "subspace", "dim").agg(
+            F.expr("sum(x_micro) div count(1)").cast("bigint").alias("c_micro")
+        )
     )
-    if materialize:
-        from ._cache import tracked_persist
-
-        out = tracked_persist(out)
-    return out
 
 
 def ivf_coarse_distances(
@@ -454,16 +452,15 @@ def ivfpq_index(
     sub_dim: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: bool = True,
     codebook_builder=None,
 ) -> tuple[DataFrame, DataFrame]:
     """Build the full index in ONE pass over the shared lineage:
     returns ``(codebooks, encoded)``. The coarse assignment (the
     n·L·d aggregation) and the residual stream feed BOTH outputs, so
-    building them separately re-executes that work 2-3x per action;
-    ``materialize`` (default on, tracked — release via
-    operators.release_operator_caches) persists the RESIDUAL LONG
-    FORM (corpus×d rows): the codebook branch and the encode branch
+    building them separately re-executes that work 2-3x per action,
+    so the build persists (tracked — release via
+    operators.release_operator_caches) the RESIDUAL LONG FORM
+    (corpus×d rows): the codebook branch and the encode branch
     each consume it, and persisting only the id-grain assignment (the
     r13 shape) still re-ran the corpus explode + assignment join +
     centroid join once per branch — the plan showed the Generate
@@ -495,20 +492,15 @@ def ivfpq_index(
     posexplode from cache instead (interleaved A/B at sf0.1:
     long-form 2.50/2.59/3.12 s vs array 2.18/2.39/2.63 s full
     build+write)."""
-    ra = _assign_residuals(corpus, centroids, sub_dim, id_col, vec_col)
-    if materialize:
-        from ._cache import tracked_persist
-
-        ra = tracked_persist(ra)
+    ra = tracked_persist(
+        _assign_residuals(corpus, centroids, sub_dim, id_col, vec_col)
+    )
     res = _res_long_form(ra, sub_dim, id_col)
     if codebook_builder is not None:
         cb = codebook_builder(res)
     else:
-        cb = _codebooks_from_residuals(res, n_codes, id_col)
-        if materialize:
-            from ._cache import tracked_persist
-
-            cb = tracked_persist(cb)  # codebook-sized; enc re-reads it
+        # codebook-sized; enc re-reads it
+        cb = tracked_persist(_codebooks_from_residuals(res, n_codes, id_col))
     enc = _encode_from_residuals(res, cb, id_col)
     return cb, enc
 
@@ -622,7 +614,6 @@ def ivfpq_topk(
     query_id: str = "query_id",
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_queries: bool = True,
     probes: DataFrame | None = None,
     exclude_ids: DataFrame | None = None,
 ) -> DataFrame:
@@ -663,20 +654,13 @@ def ivfpq_topk(
        corpus scan) for exact integer squared-L2; final top-k orders
        by (exact_d2, id).
 
-    ``broadcast_queries`` (default) fits the serving regime: a query
-    BATCH small enough that its LUT (nq·n_probe·m·n_codes rows) and
-    shortlist (nq·shortlist) broadcast. For OFFLINE bulk search — a
-    million-query backfill where those no longer fit one executor —
-    pass ``False``: the same plan runs with shuffled hash joins
-    (query-side tables repartition on the join keys; the code table
-    shuffles once on (cid, subspace, code)). Identical results
-    (equivalence-tested); the knob only moves the join strategy.
+    The query-side tables (LUT, shortlist and query vectors) are
+    broadcast: this is the serving regime, a query BATCH small enough
+    that its LUT (nq·n_probe·m·n_codes rows) and shortlist
+    (nq·shortlist) fit one executor.
 
     All-BIGINT arithmetic end to end — bitwise-stable ranking, no
     IEEE accumulation-order analysis."""
-
-    def _qside(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_queries else df
 
     if probes is None:
         probes = probed_cells(
@@ -702,7 +686,7 @@ def ivfpq_topk(
 
     # ADC over probed lists: cell-equi join, LUT broadcast
     adc = (
-        encoded.join(_qside(lut), ["cid", "subspace", "code"])
+        encoded.join(F.broadcast(lut), ["cid", "subspace", "code"])
         .where(F.col(query_id) != F.col(corpus_id))
         .groupBy(query_id, corpus_id)
         .agg(F.sum("lut_d2").alias("adc_d2"))
@@ -741,11 +725,11 @@ def ivfpq_topk(
     # subtree in the plan).
     hit = corpus.select(
         F.col(corpus_id), _micro_array(F.col(vec_col)).alias("__xm")
-    ).join(_qside(short), corpus_id)
+    ).join(F.broadcast(short), corpus_id)
     qx = queries.select(
         F.col(query_id), _micro_array(F.col(vec_col)).alias("__qm")
     )
-    exact = hit.join(_qside(qx), query_id).select(
+    exact = hit.join(F.broadcast(qx), query_id).select(
         query_id,
         corpus_id,
         "adc_d2",
@@ -933,7 +917,6 @@ def serve_pruned(
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
     missing_ok: bool = False,
-    prune: str = "auto",
     exclude_ids: DataFrame | None = None,
 ) -> DataFrame | None:
     """THE serving recipe against a persisted cid-partitioned code
@@ -943,25 +926,25 @@ def serve_pruned(
     partition-prune filter, and cid dtype handling cannot drift
     between copies (code-review r9 pass-4 #4).
 
-    ``prune`` selects how the cid-partitioned scan is restricted to
-    the probed cells (VERDICT r10 ask #1 — warm serve latency is
-    JOB-COUNT-bound at serving batch sizes, measured: a two-phase
-    shortlist-collect variant LOST 0.25 s to the extra job boundary
-    despite scanning less):
+    The session's DPP setting
+    (``spark.sql.optimizer.dynamicPartitionPruning.enabled``) selects
+    how the cid-partitioned scan is restricted to the probed cells
+    (VERDICT r10 ask #1 — warm serve latency is JOB-COUNT-bound at
+    serving batch sizes, measured: a two-phase shortlist-collect
+    variant LOST 0.25 s to the extra job boundary despite scanning
+    less):
 
-    - ``"auto"`` (default): DYNAMIC partition pruning — the ADC join
-      already equi-joins the partition column against the broadcast
-      LUT, so Catalyst inserts a runtime partition filter on ``cid``
-      and the scan prunes to the probed cells inside the ONE search
-      job, with no driver-side probe collect at all. Falls back to
-      static when the session has DPP disabled.
-    - ``"static"``: the r9 recipe — materialize the probe table, pin
-      its cells as a driver-derived ``cid IN (...)`` filter. Kept for
-      DPP-disabled sessions and as the plan-shape oracle for tests
-      (both modes are value-identical by construction: pruning only
-      moves WHERE the cell restriction is applied).
+    - DPP on (the Spark default): DYNAMIC partition pruning — the ADC
+      join already equi-joins the partition column against the
+      broadcast LUT, so Catalyst inserts a runtime partition filter
+      on ``cid`` and the scan prunes to the probed cells inside the
+      ONE search job, with no driver-side probe collect at all.
+    - DPP off: the static r9 recipe — materialize the probe table,
+      pin its cells as a driver-derived ``cid IN (...)`` filter.
+      Both paths are value-identical by construction: pruning only
+      moves WHERE the cell restriction is applied.
 
-    Steps: materialize the probe table once — it feeds BOTH the
+    Static steps: materialize the probe table once — it feeds BOTH the
     driver-side static ``cid IN (...)`` partition filter and
     :func:`ivfpq_topk`'s internal LUT, so the nq·L·d coarse
     assignment is paid once, not twice. Serving-sized query batches
@@ -989,8 +972,6 @@ def serve_pruned(
     """
     from ..sources.inline import values_df
 
-    if prune not in ("auto", "static"):
-        raise ValueError(f"prune must be 'auto' or 'static', got {prune!r}")
     spark = queries.sparkSession
     if not _lake_has_data(spark, codes_path):
         if missing_ok:
@@ -1006,7 +987,7 @@ def serve_pruned(
         )
         == "true"
     )
-    if prune == "auto" and dpp_on:
+    if dpp_on:
         lake = spark.read.parquet(codes_path).withColumn(
             "cid", F.col("cid").cast(cid_type)
         )

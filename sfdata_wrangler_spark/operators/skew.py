@@ -147,41 +147,6 @@ def default_knee_rows(
     return int(rows_per_task) * int(tasks)
 
 
-def pipeline_skew_strategy(default: str = "plain") -> str:
-    """The engine-wide skew knob (VERDICT r12 ask #2): setting
-    ``SPARK_GRAFT_SKEW_STRATEGY=auto`` in the environment routes the
-    domain pipelines' sessionizations (Clipper linked trips, taxi trip
-    segmentation) and expansion weighting through their
-    ``strategy="auto"`` pre-flight pick — each logs the decision.
-    Unset (the default) returns ``default`` ("plain"/"window"
-    depending on the caller), keeping every plan byte-identical to
-    r12's: auto's extra pre-flight pass is opt-in because it is an
-    EAGER job the caller may not want on a known-uniform feed.
-
-    Only ``auto`` is accepted: the knob feeds callers with DIFFERENT
-    strategy vocabularies ("plain"/"bucketed" vs "window"/"agg"), so
-    forwarding a specific form would crash half of them. A set-but-
-    unrecognized value (e.g. ``bucketed``) logs a loud warning once
-    instead of silently running the default (code-review r13 #6: a
-    plausibly-configured knob must never be a silent no-op)."""
-    import os
-
-    v = os.environ.get("SPARK_GRAFT_SKEW_STRATEGY", "").strip().lower()
-    if v == "auto":
-        return "auto"
-    if v and v not in _WARNED_SKEW_KNOB_VALUES:
-        _WARNED_SKEW_KNOB_VALUES.add(v)
-        logging.getLogger(__name__).warning(
-            "SPARK_GRAFT_SKEW_STRATEGY=%r is not recognized (only "
-            "'auto' is) — running the default %r strategies; pass "
-            "strategy= explicitly to pin a specific form", v, default,
-        )
-    return default
-
-
-_WARNED_SKEW_KNOB_VALUES: set = set()
-
-
 # Full-pipeline knee multiplier over default_knee_rows, MEASURED on
 # the committed 100x replicas (tools/pipeline_skew_probe.py, round
 # 13): the clipper/taxi bucketed twins carry lag state through 3-4

@@ -69,22 +69,18 @@ def duplicate_spans(
     min_docs: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = True,
 ) -> DataFrame:
     """Maximal duplicated token spans per document: ``(id, span_start,
     span_end, n_grams)`` with span_end inclusive (last covered token
     index). A span is any maximal run of k-grams each of which occurs
     in >= min_docs distinct documents.
 
-    ``materialize`` persists the positional k-gram stream — its two
-    consumers (the distinct-doc frequency aggregate and the
-    position-flagging semi-join) would otherwise each re-run the
-    corpus explode + per-gram md5, the dominant map cost. CacheManager
-    lifetime (released by ``spark.catalog.clearCache()``/session end;
-    sweep tools clear between queries); pass False for cache-free."""
-    grams = positional_kgrams(docs, k, id_col, text_col)
-    if materialize:
-        grams = tracked_persist(grams)
+    The positional k-gram stream is persisted — its two consumers
+    (the distinct-doc frequency aggregate and the position-flagging
+    semi-join) would otherwise each re-run the corpus explode +
+    per-gram md5, the dominant map cost. Released by
+    ``release_operator_caches`` / ``cache_scope``."""
+    grams = tracked_persist(positional_kgrams(docs, k, id_col, text_col))
     if min_docs == 2:
         # "in >= 2 distinct docs" ⇔ min(id) != max(id): a plain
         # combinable aggregate, so the gram stream pays ONE exchange
@@ -129,7 +125,6 @@ def remove_duplicate_spans(
     min_docs: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = True,
 ) -> DataFrame:
     """Documents with every duplicated span scrubbed: the surviving
     tokens reassembled in order as ``clean_text`` (empty string if
@@ -137,7 +132,7 @@ def remove_duplicate_spans(
     span leave via one anti join; in-order reassembly is
     array_sort(collect_list(struct(pos, tok))) — per-doc, no global
     sort."""
-    spans = duplicate_spans(docs, k, min_docs, id_col, text_col, materialize)
+    spans = duplicate_spans(docs, k, min_docs, id_col, text_col)
     covered = spans.select(
         id_col,
         F.explode(F.sequence("span_start", "span_end")).alias("pos"),

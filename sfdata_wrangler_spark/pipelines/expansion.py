@@ -43,7 +43,7 @@ def expand_and_weight(
     gtfs_trip_stops: DataFrame,
     avl: DataFrame,
     weight_cell: list[str] | None = None,
-    weight_strategy: str | None = None,
+    weight_strategy: str = "window",
 ) -> DataFrame:
     """GTFS LEFT JOIN AVL on the trip-stop key, derived metrics, then
     TRIP_WEIGHT/TOD_WEIGHT expansion (``SFMuniDataExpander.py:
@@ -55,13 +55,7 @@ def expand_and_weight(
     the window form puts the whole hot cell on one task and AQE cannot
     split window partitions. ``weight_strategy="auto"`` (VERDICT r12
     ask #2) lets ``calc_weights`` run its dimension-sized pre-flight
-    and pick at the session-derived knee instead. ``None`` (default)
-    resolves via the ``SPARK_GRAFT_SKEW_STRATEGY=auto`` engine knob —
-    unset keeps the historical window plan."""
-    if weight_strategy is None:
-        from ..operators.skew import pipeline_skew_strategy
-
-        weight_strategy = pipeline_skew_strategy("window")
+    and pick at the session-derived knee instead."""
     weight_cell = weight_cell or ["DATE", "TOD", "AGENCY_ID",
                                   "ROUTE_SHORT_NAME", "DIR"]
 

@@ -92,9 +92,7 @@ def bench_clipper_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("AgencyName"),
         F.pmod("event_id", 20).cast("string").alias("RouteName"),
     )
-    from ..operators.skew import pipeline_skew_strategy
-
-    return infer_linked_trips(tags, strategy=pipeline_skew_strategy())
+    return infer_linked_trips(tags)
 
 
 def bench_taxi_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,9 +110,7 @@ def bench_taxi_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("value") > 0, F.lit("M")).otherwise(F.lit("E"))
         .alias("status"),
     )
-    from ..operators.skew import pipeline_skew_strategy
-
-    return identify_gps_trips(pings, strategy=pipeline_skew_strategy())
+    return identify_gps_trips(pings)
 
 
 def bench_qc_panel(spark: SparkSession, sf_dir: str) -> DataFrame:

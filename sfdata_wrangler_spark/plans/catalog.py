@@ -400,21 +400,14 @@ FROM w GROUP BY month, o_orderpriority
 
 @_register("flagship_expand_weight_cascade", _FLAGSHIP_ORACLE, bench=True)
 def flagship_expand_weight_cascade(
-    spark: SparkSession, sf_dir: str, weight_strategy: str | None = None
+    spark: SparkSession, sf_dir: str, weight_strategy: str = "window"
 ) -> DataFrame:
     """J1 expand join + W7 expansion weighting + §2.4 weighted cascade.
 
     ``weight_strategy="agg"`` runs the skew-immune expansion-weight
     form (registered separately as ``flagship_skew_safe_weights``);
     both produce bitwise-identical results here because the weighting
-    addends are exactly-representable 1.0 seeds. ``None`` (default)
-    resolves via the ``SPARK_GRAFT_SKEW_STRATEGY=auto`` engine knob
-    (``operators.skew.pipeline_skew_strategy``, VERDICT r12 ask #2) —
-    unset keeps the r12 window plan."""
-    if weight_strategy is None:
-        from ..operators.skew import pipeline_skew_strategy
-
-        weight_strategy = pipeline_skew_strategy("window")
+    addends are exactly-representable 1.0 seeds."""
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     ts = (

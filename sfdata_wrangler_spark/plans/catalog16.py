@@ -191,11 +191,13 @@ def pipe_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the packer's bucket-offset aggregate, and the packer's window —
     # and Catalyst replays everything above each branch: the pre-AQE
     # r14 plan printed the bigram-LM aggregation pipeline FOUR times
-    # (plans/r14/pipe_curation_v3_after.txt, zero ReusedExchange).
+    # (plans/r14/pipe_curation_v3_after.txt in git commit bbd9b9e,
+    # zero ReusedExchange).
     # Cutting at langd materializes three narrow columns (doc_id,
     # n_tokens, lang — ints + a short string, token arrays never
     # reach it) so every branch scans that instead of re-running the
-    # LM. Interleaved A/B at sf0.1 (4 reps, tools/r15_ab_v3_cut.py):
+    # LM. Interleaved A/B at sf0.1 (4 reps, tools/r15_ab_v3_cut.py in
+    # git commit bbd9b9e):
     # count best 3.69 → 3.11 s, noop 3.42 → 2.93 s; output identical.
     langd = cut_lineage(
         lmkept.join(docs.select("doc_id", "lang"), "doc_id")

@@ -172,14 +172,14 @@ def test_operators_handle_empty_inputs(spark):
 def test_cluster_duplicates_chain_batched_convergence(spark):
     """A 10-node chain (diameter 9 — worst case for label
     propagation) still resolves to one component, and the batched
-    convergence probe fires ~iterations/check_every times instead of
-    every round."""
+    convergence probe fires on every 3rd round instead of every
+    round."""
     from sfdata_wrangler_spark.operators.dedup import cluster_duplicates
 
     chain = spark.createDataFrame(
         [Row(id_a=i, id_b=i + 1) for i in range(9)]
     )
-    out = cluster_duplicates(chain, max_iterations=20, check_every=3)
+    out = cluster_duplicates(chain, max_iterations=20)
     rows = out.collect()
     assert len(rows) == 10
     assert all(r.cluster_id == 0 for r in rows)

@@ -201,27 +201,6 @@ def test_search_against_stored_index_matches_inline(spark, tmp_path):
             assert "cid" not in line and "code" not in line, line
 
 
-def test_bulk_search_knob_is_result_identical(spark):
-    """broadcast_queries=False (the offline million-query regime:
-    LUT/shortlist shuffle instead of broadcasting) must produce
-    bit-identical results to the serving plan."""
-    emb = _clustered(spark)
-    cents, cb, enc = _index(spark, emb)
-    queries = emb.where(F.col("vec_id").isin(0, 100, 200)).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    serve = ivfpq_topk(
-        queries, enc, cents, cb, emb, k=3, n_probe=2, m=2, sub_dim=8
-    )
-    bulk = ivfpq_topk(
-        queries, enc, cents, cb, emb, k=3, n_probe=2, m=2, sub_dim=8,
-        broadcast_queries=False,
-    )
-    assert sorted(map(tuple, serve.collect())) == sorted(
-        map(tuple, bulk.collect())
-    )
-
-
 def test_kmeans_coarse_quantizer_drops_in(spark):
     """The documented drop-in: a TRAINED k-means coarse quantizer
     (similarity.kmeans_centroids) replaces the label-mean one through

@@ -6,7 +6,6 @@ change the search result."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from sfdata_wrangler_spark.operators.pq import (
@@ -203,7 +202,8 @@ def test_serve_prunes_partitions_dynamically(spark, tmp_path):
     """VERDICT r10 ask #1: the default serve path carries NO driver-
     side probe collect — the cid-partitioned scan is pruned by a
     runtime dynamicpruning subquery inside the one search job, and
-    both prune modes return identical rows."""
+    the static fallback a DPP-disabled session takes returns
+    identical rows."""
     import os
 
     from pyspark.sql import functions as F
@@ -226,18 +226,21 @@ def test_serve_prunes_partitions_dynamically(spark, tmp_path):
     )
     plan = dyn._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower()
-    static = serve_pruned(
-        queries, os.path.join(root, "codes"), cents, cb, emb,
-        prune="static", **kw,
-    )
-    assert sorted(map(tuple, dyn.collect())) == sorted(
-        map(tuple, static.collect())
-    )
-    with pytest.raises(ValueError, match="prune"):
-        serve_pruned(
-            queries, os.path.join(root, "codes"), cents, cb, emb,
-            prune="nope", **kw,
+    dpp = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
+    prev = spark.conf.get(dpp)
+    spark.conf.set(dpp, "false")
+    try:
+        static = serve_pruned(
+            queries, os.path.join(root, "codes"), cents, cb, emb, **kw
         )
+        static_plan = static._jdf.queryExecution().executedPlan().toString()
+        assert "dynamicpruning" not in static_plan.lower()
+        static_rows = static.collect()
+    finally:
+        spark.conf.set(dpp, prev)
+    assert sorted(map(tuple, dyn.collect())) == sorted(
+        map(tuple, static_rows)
+    )
 
 
 def test_serve_cache_hits_and_invalidates(spark, tmp_path):

@@ -7,9 +7,7 @@
   the knee, and logs the decision;
 - the knee default is now derived from the session
   (``skew.default_knee_rows``) with 1M @ local[32] as the calibration
-  point;
-- ``SPARK_GRAFT_SKEW_STRATEGY=auto`` is the engine-wide opt-in knob
-  (default off keeps every plan unchanged).
+  point.
 """
 
 import datetime as dt
@@ -20,10 +18,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from sfdata_wrangler_spark.operators.skew import (
-    default_knee_rows,
-    pipeline_skew_strategy,
-)
+from sfdata_wrangler_spark.operators.skew import default_knee_rows
 from sfdata_wrangler_spark.pipelines.clipper import infer_linked_trips
 from sfdata_wrangler_spark.pipelines.taxi import identify_gps_trips
 
@@ -207,17 +202,6 @@ def test_default_knee_rows_derivation(spark):
     tiny = spark.createDataFrame([(1, 1.0)], "card string, v double")
     assert choose_weight_strategy(tiny, ["card"]) == "window"
     assert choose_sessionize_strategy(tiny, ["card"]) == "plain"
-
-
-def test_pipeline_skew_strategy_env_knob(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_SKEW_STRATEGY", raising=False)
-    assert pipeline_skew_strategy() == "plain"
-    assert pipeline_skew_strategy("window") == "window"
-    monkeypatch.setenv("SPARK_GRAFT_SKEW_STRATEGY", "auto")
-    assert pipeline_skew_strategy() == "auto"
-    assert pipeline_skew_strategy("window") == "auto"
-    monkeypatch.setenv("SPARK_GRAFT_SKEW_STRATEGY", "bogus")
-    assert pipeline_skew_strategy() == "plain"  # unknown value = off
 
 
 HOT_REPLICA = "/tmp/sfdata_sf100_hotuser"

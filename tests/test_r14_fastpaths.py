@@ -1,10 +1,9 @@
 """Focused equivalence tests for the r14 operator-internal
-optimizations: the min_docs=2 min/max fast path in the two
-distinct-doc-threshold operators, and the tokenize-once branch of the
-bigram LM scorer. Each pins the optimized default bit-equal to the
-general/plain path on inputs that exercise the edges (single-doc
-lines/grams, repeats within ONE doc — which must NOT count as two
-distinct docs — and empty/whitespace docs)."""
+optimization: the min_docs=2 min/max fast path in the two
+distinct-doc-threshold operators. Each pins the optimized default
+bit-equal to the general path on inputs that exercise the edges
+(single-doc lines/grams, repeats within ONE doc — which must NOT
+count as two distinct docs — and empty/whitespace docs)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -69,22 +68,3 @@ def test_dup_spans_minmax_fastpath(spark):
     )
     ids = {s[0] for s in spans}
     assert ids == {1, 2}, spans  # doc 3's self-repeat must not flag
-
-
-def test_lm_materialize_tokens_equals_plain(docs):
-    from sfdata_wrangler_spark.operators.lm import bigram_lm_score
-
-    a = sorted(
-        map(
-            tuple,
-            bigram_lm_score(docs, materialize_tokens=False).collect(),
-        )
-    )
-    b = sorted(
-        map(
-            tuple,
-            bigram_lm_score(docs, materialize_tokens=True).collect(),
-        )
-    )
-    assert a == b
-    docs.sparkSession.catalog.clearCache()

@@ -9,8 +9,8 @@
   bigram-LM subtree out of the SQL plan's replayed branches — the
   r14 plan printed the LM aggregation pipeline (arrays_zip explode)
   four times below the tail's branch points; the cut plan contains
-  zero (plans/r15/pipe_curation_v3_{before,after}.txt: 1674 → 248
-  lines, Exchange 114 → 18).
+  zero (plans/r15/pipe_curation_v3_{before,after}.txt in git commit
+  bbd9b9e: 1674 → 248 lines, Exchange 114 → 18).
 """
 
 import pytest

@@ -25,9 +25,9 @@ Checks:
 1. SWEEP_FRESHNESS.json regenerated in place for the exact tree.
 2. Every engine/test/tool source file is tracked by git — an
    untracked .py is exactly the round-7 failure shape.
-3. Every operator module is imported (directly or transitively) by
-   the package, a catalog wave, or a test — dead modules are
-   unverifiable code.
+3. Every module under sfdata_wrangler_spark/ is imported by another
+   engine module, a test, or an entry point (__spark_entry__.py,
+   bench.py) — dead modules are unverifiable code.
 4. The structural suite that pins 1-3 passes (test_sweep_order.py is
    cheap; the full suite is the /verify recipe's job, not this gate's).
 5. The working tree is clean apart from the files this gate itself
@@ -40,6 +40,7 @@ Exit 1 on any failure.
 
 from __future__ import annotations
 
+import ast
 import os
 import subprocess
 import sys
@@ -90,43 +91,64 @@ def check_untracked() -> list[str]:
     return [f"untracked source/fixture file: {p}" for p in untracked]
 
 
-def check_operator_reachability() -> list[str]:
-    """Every operators/*.py must be reachable: imported by the
-    operators package, a plans wave, a source/pipeline module, or a
-    test — privacy.py failed exactly this in round 7."""
-    op_dir = os.path.join(ROOT, "sfdata_wrangler_spark", "operators")
-    mods = [
-        f[:-3]
-        for f in os.listdir(op_dir)
-        if f.endswith(".py") and not f.startswith("_")
-    ]
-    import re
+def _module_name(path: str) -> str:
+    rel = os.path.relpath(path, ROOT)[: -len(".py")]
+    parts = rel.split(os.sep)
+    if parts[-1] == "__init__":
+        parts = parts[:-1]
+    return ".".join(parts)
 
-    hay = []
-    for base in ("sfdata_wrangler_spark", "tests"):
-        for dirpath, _dirs, files in os.walk(os.path.join(ROOT, base)):
-            for f in files:
-                if f.endswith(".py"):
-                    with open(
-                        os.path.join(dirpath, f), encoding="utf-8"
-                    ) as fh:
-                        hay.append(fh.read())
-    blob = "\n".join(hay)
+
+def _imported_modules(path: str) -> set[str]:
+    """Absolute dotted names of everything ``path`` imports — actual
+    import statements only, so a docstring mentioning a module never
+    marks it reachable. ``from pkg import name`` yields both ``pkg``
+    and ``pkg.name`` (name may be a submodule)."""
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), path)
+    pkg = _module_name(path).split(".")
+    if not path.endswith("__init__.py"):
+        pkg = pkg[:-1]
+    out: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = pkg[: len(pkg) - node.level + 1] if node.level else []
+            mod = ".".join(base + ([node.module] if node.module else []))
+            out.add(mod)
+            out.update(f"{mod}.{a.name}" for a in node.names)
+    return out
+
+
+def check_module_reachability() -> list[str]:
+    """Every module under sfdata_wrangler_spark/ must be imported by
+    another engine module, a test, or an entry point (the driver's
+    ``__spark_entry__.py``, the ``bench.py`` CLI) — privacy.py failed
+    exactly this in round 7, and an orphan module such as an unused
+    schema catalog is unverifiable code."""
+    pkg_dir = os.path.join(ROOT, "sfdata_wrangler_spark")
+    sources = [
+        os.path.join(ROOT, f) for f in ("__spark_entry__.py", "bench.py")
+    ]
+    for base in (pkg_dir, os.path.join(ROOT, "tests")):
+        for dirpath, _dirs, files in os.walk(base):
+            sources += [
+                os.path.join(dirpath, f) for f in files if f.endswith(".py")
+            ]
+    imported: set[str] = set()
+    for src in sources:
+        imported |= _imported_modules(src)
     problems = []
-    for m in mods:
-        # actual import statements only — a docstring mentioning
-        # 'operators.privacy' must not mark the module reachable
-        pat = re.compile(
-            rf"^\s*(?:from\s+\S*operators\.{m}\s+import"
-            rf"|from\s+\S*operators\s+import\s+[^\n]*\b{m}\b"
-            rf"|import\s+\S*operators\.{m}\b"
-            rf"|from\s+\.\s*import\s+[^\n]*\b{m}\b"
-            rf"|from\s+\.{m}\s+import)",
-            re.MULTILINE,
-        )
-        if not pat.search(blob):
+    for src in sorted(sources):
+        if not src.startswith(pkg_dir + os.sep) or src.endswith(
+            "__init__.py"
+        ):
+            continue
+        if _module_name(src) not in imported:
             problems.append(
-                f"operators/{m}.py is imported by nothing (dead module)"
+                f"{os.path.relpath(src, ROOT)} is imported by nothing"
+                " (dead module)"
             )
     return problems
 
@@ -159,7 +181,7 @@ def main() -> int:
     problems: list[str] = []
     problems += regenerate_manifest()
     problems += check_untracked()
-    problems += check_operator_reachability()
+    problems += check_module_reachability()
     problems += check_structural_tests()
     problems += check_clean_tree()
     for p in problems:

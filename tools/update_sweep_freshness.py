@@ -102,7 +102,11 @@ def main() -> int:
     now = int(time.time())
     for line in dirty.splitlines():
         path = line[3:].strip().split(" -> ")[-1]
-        if path.startswith("sfdata_wrangler_spark/") and path.endswith(".py"):
+        if (
+            path.startswith("sfdata_wrangler_spark/")
+            and path.endswith(".py")
+            and os.path.exists(os.path.join(ROOT, path))  # not deleted
+        ):
             files[path] = now
 
     # content identity: every package file on disk, hashed as a git
